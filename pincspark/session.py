@@ -5,6 +5,23 @@ same logical plans scale to a multi-executor cluster: AQE handles runtime
 re-planning and skew joins, shuffle partition count is sized to cores (local)
 but should be raised to ~2-3x total cores on a real cluster, Arrow is enabled
 for the pandas-UDF decode kernel.
+
+Python workers start from ``pincspark.daemon`` (``spark.python.daemon.module``).
+Spark's worker calls ``importlib.invalidate_caches()`` before every task, and
+on Python before 3.13 each of a worker's 14-18 zipimporters then re-reads the
+1,328-entry central directory of ``pyspark.zip``: 0.10-0.13 s per task on an
+idle core, 0.17-0.67 s under load, often more than the UDF's own work. A
+``live_feed`` micro-batch starts about a dozen such tasks (reassembly and
+decode). The daemon re-reads an archive only when it changed, which makes
+the call 52 us and took ``aisbench`` ``live_feed`` p50 from 3.74 to 2.57 s
+(ten seed pairs, 4 vCPUs, Python 3.11, Spark 4.1.2). The daemon module must
+be importable by the workers, as the engine's UDFs already are.
+
+DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``) is
+off; the comment at its setting below says why. It is a static conf, fixed
+when the session starts, so ``spark.conf.set`` cannot turn it back on. To get
+the call-site error context back while debugging, set it to ``"true"`` in
+``get_spark`` and start a new process.
 """
 
 from __future__ import annotations
@@ -42,6 +59,7 @@ def get_spark(app_name: str = "pincspark", cpus: int | None = None) -> SparkSess
         # minhash_lsh_pairs build alone. Errors still carry the full
         # Python traceback without it.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", "pincspark.daemon")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")
     )

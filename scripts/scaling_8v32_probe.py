@@ -89,7 +89,7 @@ def main() -> int:
     for cpus in ("8", "32"):
         code = RUNNER.format(repo=REPO)
         r = subprocess.run(
-            ["python", "-c", code, cpus, dst, json.dumps(names)],
+            [sys.executable, "-c", code, cpus, dst, json.dumps(names)],
             capture_output=True,
             text=True,
         )
